@@ -12,17 +12,24 @@ A re-run with the same manifest skips committed units and produces
 byte-identical sink contents (tested).  At cluster scale each unit is an
 independent Spark job over a hash-pruned slice, so a failed run loses at
 most one unit's work.
+
+Every entry is one line written with its newline, so a last line without
+one is an append cut short by a crash: ``load`` skips it as uncommitted
+and the next append cuts it off.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 from dataclasses import dataclass, field
 
 
 RUN_HEADER_UNIT = "_run"
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -36,14 +43,17 @@ class CheckpointManifest:
         m = cls(path=path)
         if os.path.exists(path):
             with open(path) as f:
-                for line in f:
-                    line = line.strip()
-                    if line:
-                        e = json.loads(line)
-                        if e["unit"] == RUN_HEADER_UNIT:
-                            m.run_header = e
-                        else:
-                            m.entries[e["unit"]] = e
+                *lines, torn = f.read().split("\n")
+            if torn.strip():
+                _log.warning("skipping torn last record of %s: %r", path, torn)
+            for line in lines:
+                line = line.strip()
+                if line:
+                    e = json.loads(line)  # a corrupt terminated line still raises
+                    if e["unit"] == RUN_HEADER_UNIT:
+                        m.run_header = e
+                    else:
+                        m.entries[e["unit"]] = e
         return m
 
     def run_fingerprint(self) -> str | None:
@@ -58,9 +68,7 @@ class CheckpointManifest:
             "committed_at": time.time(),
         }
         self.run_header = entry
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        with open(self.path, "a") as f:
-            f.write(json.dumps(entry) + "\n")
+        self._append(entry)
 
     def is_committed(self, unit: str) -> bool:
         return unit in self.entries
@@ -75,9 +83,18 @@ class CheckpointManifest:
             "committed_at": time.time(),
         }
         self.entries[unit] = entry
+        self._append(entry)
+
+    def _append(self, entry: dict) -> None:
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        with open(self.path, "a") as f:
-            f.write(json.dumps(entry) + "\n")
+        with open(self.path, "a+b") as f:
+            f.seek(0)
+            body = f.read()
+            if not body.endswith(b"\n"):
+                # cut the torn record load skipped, so this entry starts
+                # on a fresh line instead of being glued onto it
+                f.truncate(body.rfind(b"\n") + 1)
+            f.write((json.dumps(entry) + "\n").encode())
 
     def metrics(self) -> dict:
         return {

@@ -1,4 +1,4 @@
-"""End-to-end parse → enrich → route → aggregate pipeline.
+"""End-to-end parse → dictionary → route → aggregate pipeline.
 
 One logical DAG (SURVEY §4.3 target plan; route shape reworked in r6 —
 guide §8 "decide with small rows, move big rows once"):
@@ -7,13 +7,12 @@ guide §8 "decide with small rows, move big rows once"):
       → parse_stage          (narrow: masked + sig columns, codegen)
       → dictionary build     (1 hash-agg shuffle collapsing to ≤10^4 rows
                               + driver merge + broadcast back)
-      → slim pre-shuffle     (broadcast join: + template_id only;
-                              conv_bucket; raw row otherwise untouched)
-      → route exchange       (salted repartition carrying ONLY the raw
-                              row + template_id + conv_bucket)
-      → post-exchange attach (broadcast template table with per-template
-                              precomputed event_type + param metadata;
-                              parameters derived by positional indexing)
+      → route_plan           (plans/route.py, shared with streaming and
+                              --explain: broadcast sig join -> slim frame,
+                              salted route exchange carrying ONLY the raw
+                              row + template_id + conv_bucket, then the
+                              post-exchange attach of template,
+                              event_type and parameters)
       → partitioned write    (checkpointed in conv-bucket groups)
       → aggregates           (template_id-keyed rollup, template string
                               attached at rollup cardinality)
@@ -23,7 +22,9 @@ conv-bucket groups with dynamic partition overwrite, so every group is
 idempotent and a killed run resumes by skipping committed groups
 (checkpoint.CheckpointManifest).  Row counts + a content fingerprint
 (bit_xor of per-row hashes) are observed ON the write job itself
-(pyspark Observation) — lineage metrics cost no extra pass.
+(pyspark Observation) — lineage metrics cost no extra pass.  The parse
+cache and the session conf it changes are released even when a group
+write fails.
 
 Reference lifecycle being reproduced: ParserService.parse_logs
 (src/core/parser_service.py:66-202) and
@@ -47,12 +48,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sherlog_parser_spark.checkpoint import CheckpointManifest
-from sherlog_parser_spark.functions.masking import (
-    apply_params_expr,
-    event_type_expr,
-    template_param_meta,
-    tokens_fast_expr,
-)
 from sherlog_parser_spark.plans.aggregate import (
     sink_rollup,
     sink_rollup_slim,
@@ -66,12 +61,7 @@ from sherlog_parser_spark.plans.dictionary import (
     dictionary_state,
 )
 from sherlog_parser_spark.plans.parse import parse_stage
-from sherlog_parser_spark.plans.route import (
-    ROUTE_COLS,
-    conv_bucket_expr,
-    route_cols,
-    salt_expr,
-)
+from sherlog_parser_spark.plans.route import route_plan, write_routed
 
 
 _log = logging.getLogger(__name__)
@@ -107,12 +97,10 @@ def run_pipeline(
     commit_groups: int = 4,
     salt_buckets: int = 4,
     use_arrow_udf: bool = False,
-    with_params: bool = True,
     resume: bool = True,
     write_aggregates: bool = True,
     aggregate_source: str = "enriched",
     persist_parsed: bool = True,
-    cache_compressed: bool = False,
 ) -> PipelineResult:
     import shutil
 
@@ -127,7 +115,6 @@ def run_pipeline(
             "commit_groups": commit_groups,
             "salt_buckets": salt_buckets,
             "use_arrow_udf": use_arrow_udf,
-            "with_params": with_params,
         },
     )
 
@@ -160,7 +147,6 @@ def run_pipeline(
         manifest.commit_run(run_fp)
 
     parsed = parse_stage(transcripts, use_arrow_udf=use_arrow_udf)
-    prev_cache_codec = None
     if persist_parsed:
         # the dictionary build, the routed write, and the aggregates each
         # need the masked/sig columns; persisting the parse stage turns
@@ -169,147 +155,85 @@ def run_pipeline(
         # deployments)
         from pyspark import StorageLevel
 
-        # cache_compressed=False (default, r6): this cache lives for ONE
-        # run and is re-read ~3x — columnar compression of the text-heavy
-        # batches cost ~25% of the build phase (A/B at 1 core: 79-89s ->
-        # 59-66s) for no read-side gain at this reuse count.  Deployments
-        # where executor cache memory is the binding constraint pass
-        # cache_compressed=True.  The session conf is restored after the
-        # run.
+        # uncompressed (r6): this cache lives for ONE run and is re-read
+        # ~3x — columnar compression of the text-heavy batches cost ~25%
+        # of the build phase (A/B at 1 core: 79-89s -> 59-66s) for no
+        # read-side gain at this reuse count
         prev_cache_codec = spark.conf.get(
             "spark.sql.inMemoryColumnarStorage.compressed", "true"
         )
-        spark.conf.set(
-            "spark.sql.inMemoryColumnarStorage.compressed",
-            "true" if cache_compressed else "false",
-        )
+        spark.conf.set("spark.sql.inMemoryColumnarStorage.compressed", "false")
         parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
-    if manifest.entries and os.path.exists(dict_path):
-        # resuming a validated run: reuse the persisted dictionary so
-        # already-committed groups and in-flight groups share template ids
-        with open(dict_path) as f:
-            tdict = dictionary_from_state(spark, json.load(f))
-    else:
-        tdict = build_template_dictionary(parsed)
-        with open(dict_path, "w") as f:
-            json.dump(dictionary_state(tdict), f)
-    # r6 route-path restructure (guide §2.3/§8: shuffle keys + payload
-    # once, attach derived columns post-exchange).  The exchange feeding
-    # the partitioned write used to carry template (string), event_type
-    # and the parameters map — all functionally dependent on
-    # (template_id, text), both of which already ride the shuffle.  Now
-    # the pre-shuffle frame is just the raw row + template_id +
-    # conv_bucket; template / event_type / parameters are attached AFTER
-    # the exchange from a broadcast of the ≤10^4-row template table
-    # (event_type and param positions precomputed per template, not per
-    # row — see enrich.py).  Row/column-identical sink: pinned by the
-    # resume/fingerprint e2e tests and the parity suite.  The role/tool
-    # dim join of enrich_stage contributes no ROUTE_COLS column and its
-    # (role, tool) keys are unique by construction, so it is provably
-    # row-preserving and elided from the route path entirely.
-    base_cols = [c for c in route_cols(parsed) if c in parsed.columns]
-    pre = (
-        parsed.select(*base_cols, "sig")
-        .join(F.broadcast(tdict.df.select("sig", "template_id")), "sig", "left")
-        .drop("sig")
-        .withColumn("conv_bucket", conv_bucket_expr("conv_id", n_buckets))
-    )
-    tpl_df = spark.createDataFrame(
-        [(tid, t) for tid, t in enumerate(tdict.templates)],
-        "template_id long, template string",
-    )
-    tpl_meta = tpl_df.withColumn("__event_type", event_type_expr("template"))
-    if with_params:
-        tpl_meta = tpl_meta.withColumn("__pmeta", template_param_meta("template"))
-
-    def _attach_derived(frame: DataFrame) -> DataFrame:
-        out = frame.join(F.broadcast(tpl_meta), "template_id", "left").withColumn(
-            "event_type", F.coalesce(F.col("__event_type"), F.lit("UNKNOWN"))
-        )
-        if with_params:
-            out = out.withColumn("__lt", tokens_fast_expr("text")).withColumn(
-                "parameters", apply_params_expr(F.col("__lt"), F.col("__pmeta"))
-            )
-        final_cols = [c for c in ROUTE_COLS if c in out.columns] + ["conv_bucket"]
-        return out.select(*final_cols)
-
-    # Aggregates overlap the route write (r3 judge item #5): the rollup
-    # needs only tdict + the persisted parse cache, so its tasks fill the
-    # scheduler gaps the route loop leaves (driver-side file commit +
-    # manifest appends have no pending tasks; under FIFO a second job's
-    # tasks run in exactly those gaps).  The alternative the verdict
-    # floated — deriving the rollup from the route write's Observation —
-    # doesn't type-check: Observation carries scalar aggregates only,
-    # while the rollup is per-(template_id, tool, window) ROWS.  The
-    # 'sink' source must still wait for the write to finish.
     agg_error: list[BaseException] = []
     agg_thread = None
-
-    def _write_aggregates():
-        try:
-            if aggregate_source == "sink":
-                rollup = sink_rollup(spark.read.parquet(routed_dir)).persist()
-            else:
-                # r6: the rollup's grouping keys no longer carry the
-                # template STRING through the per-row hash aggregate —
-                # group by template_id only and attach template from the
-                # broadcast table at rollup cardinality (≤10^4 rows);
-                # template_id -> template is 1:1, so the final frames
-                # are row-identical (guide §2.3 narrower keys)
-                rollup = sink_rollup_slim(pre, tpl_df).persist()
-            template_frequency_from_rollup(rollup).write.mode("overwrite").parquet(
-                os.path.join(out_dir, "agg_template_freq")
-            )
-            tool_usage_from_rollup(rollup).write.mode("overwrite").parquet(
-                os.path.join(out_dir, "agg_tool_usage")
-            )
-            rollup.unpersist()
-        except BaseException as e:  # surfaced after join
-            agg_error.append(e)
-
-    if write_aggregates and aggregate_source == "enriched":
-        agg_thread = threading.Thread(target=_write_aggregates, name="aggregates")
-        agg_thread.start()
-
-    salt = salt_expr(tdict.hot_template_ids(), salt_buckets)
-    manifest_lock = threading.Lock()
-
-    def _write_group(g: int) -> int:
-        unit = f"bucket_group={g}"
-        if manifest.is_committed(unit):
-            return int(manifest.entries[unit]["rows"])
-        t0 = time.time()
-        obs = Observation(f"route_g{g}")
-        sub = pre.filter(F.pmod(F.col("conv_bucket"), F.lit(commit_groups)) == g).observe(
-            obs, F.count(F.lit(1)).alias("rows"), F.bit_xor(F.xxhash64("conv_id", "turn_idx")).alias("fp")
-        )
-        (
-            _attach_derived(
-                sub.repartition(F.col("template_id"), F.col("tool"), F.col("conv_bucket"), salt)
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            # selective dictionary encoding (r6 A/B at 1 core, one
-            # group: dict-off 40.6s/187MB, dict-on 47.9s/160MB,
-            # SELECTIVE 38.9s/163MB): dictionary ON for the
-            # low-cardinality columns (template, event_type, role,
-            # parameter keys), OFF for the high-cardinality payloads
-            # whose hashing only burned CPU (the r2 finding, now
-            # per-column instead of global)
-            .option("parquet.enable.dictionary", "true")
-            .option("parquet.enable.dictionary#text", "false")
-            .option("parquet.enable.dictionary#conv_id", "false")
-            .option("parquet.enable.dictionary#parameters.key_value.value", "false")
-            .partitionBy("template_id", "tool", "conv_bucket")
-            .parquet(routed_dir)
-        )
-        rows = int(obs.get["rows"])
-        fp = str(obs.get["fp"])
-        with manifest_lock:
-            manifest.commit(unit, rows, fp, routed_dir, time.time() - t0)
-        return rows
-
     try:
+        if manifest.entries and os.path.exists(dict_path):
+            # resuming a validated run: reuse the persisted dictionary so
+            # already-committed groups and in-flight groups share template ids
+            with open(dict_path) as f:
+                tdict = dictionary_from_state(spark, json.load(f))
+        else:
+            tdict = build_template_dictionary(parsed)
+            with open(dict_path, "w") as f:
+                json.dump(dictionary_state(tdict), f)
+        plan = route_plan(parsed, tdict, n_buckets, salt_buckets)
+
+        # Aggregates overlap the route write (r3 judge item #5): the
+        # rollup needs only tdict + the persisted parse cache, so its
+        # tasks fill the scheduler gaps the route loop leaves
+        # (driver-side file commit + manifest appends have no pending
+        # tasks; under FIFO a second job's tasks run in exactly those
+        # gaps).  Deriving the rollup from the route write's Observation
+        # doesn't type-check: Observation carries scalar aggregates only,
+        # while the rollup is per-(template_id, tool, window) ROWS.  The
+        # 'sink' source must still wait for the write to finish.
+        def _write_aggregates():
+            try:
+                if aggregate_source == "sink":
+                    rollup = sink_rollup(spark.read.parquet(routed_dir)).persist()
+                else:
+                    # r6: group by template_id only and attach template
+                    # from the broadcast table at rollup cardinality
+                    # (≤10^4 rows); template_id -> template is 1:1, so
+                    # the final frames are row-identical (guide §2.3
+                    # narrower keys)
+                    rollup = sink_rollup_slim(plan.frame, plan.templates).persist()
+                template_frequency_from_rollup(rollup).write.mode("overwrite").parquet(
+                    os.path.join(out_dir, "agg_template_freq")
+                )
+                tool_usage_from_rollup(rollup).write.mode("overwrite").parquet(
+                    os.path.join(out_dir, "agg_tool_usage")
+                )
+                rollup.unpersist()
+            except BaseException as e:  # surfaced after join
+                agg_error.append(e)
+
+        if write_aggregates and aggregate_source == "enriched":
+            agg_thread = threading.Thread(target=_write_aggregates, name="aggregates")
+            agg_thread.start()
+
+        manifest_lock = threading.Lock()
+
+        def _write_group(g: int) -> int:
+            unit = f"bucket_group={g}"
+            if manifest.is_committed(unit):
+                return int(manifest.entries[unit]["rows"])
+            t0 = time.time()
+            obs = Observation(f"route_g{g}")
+            sub = plan.frame.filter(
+                F.pmod(F.col("conv_bucket"), F.lit(commit_groups)) == g
+            ).observe(
+                obs,
+                F.count(F.lit(1)).alias("rows"),
+                F.bit_xor(F.xxhash64("conv_id", "turn_idx")).alias("fp"),
+            )
+            write_routed(plan.routed(sub), routed_dir)
+            rows = int(obs.get["rows"])
+            fp = str(obs.get["fp"])
+            with manifest_lock:
+                manifest.commit(unit, rows, fp, routed_dir, time.time() - t0)
+            return rows
+
         # r6 (guide §2.6): group writes overlap from a small thread pool
         # — one group's driver-side file commit / manifest append leaves
         # executors idle, and under FIFO the next group's tasks back-fill
@@ -328,33 +252,24 @@ def run_pipeline(
             max_workers=min(2, max(1, commit_groups)), thread_name_prefix="route-group"
         ) as pool:
             total_rows = sum(pool.map(_write_group, range(commit_groups)))
+        if agg_thread is None and write_aggregates:
+            # per-sink counts are grouped by the sink keys (template_id,
+            # tool); one fine-grained rollup scan of the sink feeds both
+            # aggregates (counts are algebraic)
+            _write_aggregates()
     finally:
         # a failing group write must still wait for the aggregates
         # thread — otherwise the caller's spark.stop() kills its
         # in-flight jobs mid-write and the original error drowns in
-        # secondary py4j noise (r4 review)
+        # secondary py4j noise (r4 review) — and must not leave the parse
+        # cache persisted or the session conf changed
         if agg_thread is not None:
             agg_thread.join()
-
-    if agg_thread is not None:
-        agg_thread.join()  # no-op if the finally above already joined
-        if agg_error:
-            raise agg_error[0]
-    elif write_aggregates:
-        # per-sink counts are grouped by the sink keys (template_id, tool);
-        # computing them from the in-flight frame is row-identical to
-        # re-reading the sink (verified in tests) and avoids a serial
-        # many-small-files listing + rescan.  One fine-grained rollup scan
-        # feeds both aggregates (counts are algebraic).
-        _write_aggregates()
-        if agg_error:
-            raise agg_error[0]
-    if persist_parsed:
-        parsed.unpersist()
-        if prev_cache_codec is not None:
-            spark.conf.set(
-                "spark.sql.inMemoryColumnarStorage.compressed", prev_cache_codec
-            )
+        if persist_parsed:
+            parsed.unpersist()
+            spark.conf.set("spark.sql.inMemoryColumnarStorage.compressed", prev_cache_codec)
+    if agg_error:
+        raise agg_error[0]
 
     wall = time.time() - t_start
     with open(os.path.join(out_dir, "run_metrics.json"), "w") as f:

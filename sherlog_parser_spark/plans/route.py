@@ -1,31 +1,59 @@
-"""Route stage: fan-out write to per-template/per-tool sinks.
+"""Route stage: the one plan from parsed turns to the partitioned sink.
 
 The reference's per-upload table fan-out (src/ui/log_analyzer.py:39-59)
-generalized per north_rule: enriched turns land under
+generalized per north_rule: routed turns land under
 
     <root>/template_id=<T>/tool=<t>/conv_bucket=<b>/part-*.parquet
 
 ``conv_bucket = pmod(xxhash64(conv_id), n_buckets)`` mirrors Iceberg's
-``bucket(N, conv_id)`` transform (parquet directory layout is the
-sandbox fallback for Iceberg — SURVEY §7.3.6; the write call is kept
-behind one function so an Iceberg ``writeTo(...).append()`` slots in).
+``bucket(N, conv_id)`` transform (the parquet directory layout is
+the fallback where no Iceberg runtime is available — SURVEY §7.3.6).
 
-Skew: hot templates (Zipfian) are spread across writer tasks by
-repartitioning on the partition columns PLUS a salt derived from
-(conv_id, turn_idx), so one template does not serialize into one task;
-AQE skew handling remains on as backstop.
+:func:`route_plan` builds the route frame once for every caller — the
+batch pipeline, streaming, ``run.py --explain`` and the plan dumper
+(guide §8 "decide with small rows, move big rows once"):
+
+    parsed ─ broadcast join sig -> template_id, + conv_bucket   (frame)
+           ─ salted repartition on template_id, tool,
+             conv_bucket, salt                                  (routed)
+           ─ broadcast join of the per-template metadata:
+             template, event_type, parameter positions          (attach)
+
+The exchange carries only the raw row + ``template_id`` +
+``conv_bucket``; everything functionally dependent on the template is
+computed on the ≤10^4-row template table and attached after the
+shuffle, so per-row work reduces to one whitespace tokenization of
+``text`` plus positional indexing.  A dictionary miss (null
+``template_id``) gets a null template, ``UNKNOWN`` event type and an
+empty parameters map — the legacy per-row values (pinned by
+tests/test_enrich_equivalence.py).
+
+Skew: hot templates (Zipfian) are spread across writer tasks by a salt
+derived from (conv_id, turn_idx), so one template does not serialize
+into one task; AQE skew handling remains on as backstop.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from sherlog_parser_spark.functions.masking import (
+    apply_params_expr,
+    event_type_expr,
+    template_param_meta,
+    tokens_fast_expr,
+)
+from sherlog_parser_spark.plans.dictionary import TemplateDictionary
 
 # FIXTURES.md §5 sink schema (reference store analog, src/core/timeseries.py:251-264)
 ROUTE_COLS = [
     "conv_id", "turn_idx", "role", "tool", "ts", "text",
     "template_id", "template", "parameters", "event_type",
 ]
+ROUTE_PARTITIONS = ("template_id", "tool", "conv_bucket")
 
 
 def conv_bucket_expr(conv_id: Column | str, n_buckets: int) -> Column:
@@ -47,42 +75,80 @@ def salt_expr(hot_template_ids: list[int] | None, salt_buckets: int):
     ).otherwise(F.lit(0))
 
 
-def route_cols(df: DataFrame) -> list[str]:
-    """ROUTE_COLS present on df (parameters is optional when the enrich
-    stage ran with with_params=False, e.g. streaming)."""
-    return [c for c in ROUTE_COLS if c in df.columns]
+@dataclass(frozen=True)
+class RoutePlan:
+    """The route stage for one parsed input and frozen dictionary.
+
+    ``frame`` is the slim pre-shuffle frame (raw row + ``template_id`` +
+    ``conv_bucket``); callers may filter or observe it before
+    :meth:`routed`.  ``templates`` is the ``(template_id, template)``
+    table the slim rollup joins at rollup cardinality."""
+
+    frame: DataFrame
+    templates: DataFrame
+    n_buckets: int
+    _meta: DataFrame
+    _salt: Column
+
+    def attach(self, frame: DataFrame) -> DataFrame:
+        """Attach template, event_type and parameters to a slice of
+        ``frame`` (unshuffled); returns the sink columns + conv_bucket."""
+        out = (
+            frame.join(F.broadcast(self._meta), "template_id", "left")
+            .withColumn("event_type", F.coalesce(F.col("__event_type"), F.lit("UNKNOWN")))
+            .withColumn("__lt", tokens_fast_expr("text"))
+            .withColumn("parameters", apply_params_expr(F.col("__lt"), F.col("__pmeta")))
+        )
+        return out.select(*[c for c in ROUTE_COLS if c in out.columns], "conv_bucket")
+
+    def routed(self, frame: DataFrame) -> DataFrame:
+        """The salted route exchange, then the post-exchange attach."""
+        return self.attach(frame.repartition(*map(F.col, ROUTE_PARTITIONS), self._salt))
 
 
-def route_stage(
-    enriched: DataFrame,
-    out_dir: str,
+def route_plan(
+    parsed: DataFrame,
+    tdict: TemplateDictionary,
     n_buckets: int = 8,
     salt_buckets: int = 4,
-    hot_template_ids: list[int] | None = None,
-    mode: str = "overwrite",
-    extra_cols: list[str] | None = None,
-) -> None:
-    cols = route_cols(enriched) + (extra_cols or [])
-    routed = enriched.select(*cols).withColumn("conv_bucket", conv_bucket_expr("conv_id", n_buckets))
-    salt = salt_expr(hot_template_ids, salt_buckets)
+) -> RoutePlan:
+    """Build the route stage over ``parsed`` (parse_stage output, batch
+    or streaming).  Pure: defines frames, runs no job."""
+    frame = (
+        parsed.select(*[c for c in ROUTE_COLS if c in parsed.columns], "sig")
+        .join(F.broadcast(tdict.df.select("sig", "template_id")), "sig", "left")
+        .drop("sig")
+        .withColumn("conv_bucket", conv_bucket_expr("conv_id", n_buckets))
+    )
+    templates = parsed.sparkSession.createDataFrame(
+        list(enumerate(tdict.templates)), "template_id long, template string"
+    )
+    meta = templates.withColumn("__event_type", event_type_expr("template")).withColumn(
+        "__pmeta", template_param_meta("template")
+    )
+    return RoutePlan(
+        frame, templates, n_buckets, meta, salt_expr(tdict.hot_template_ids(), salt_buckets)
+    )
+
+
+def write_routed(frame: DataFrame, path: str, partition_by=ROUTE_PARTITIONS) -> None:
+    """Write routed rows with dynamic partition overwrite, so rewriting a
+    slice replaces exactly its own partitions (idempotent retries)."""
     (
-        routed.repartition(F.col("template_id"), F.col("tool"), F.col("conv_bucket"), salt)
-        .write.mode(mode)
-        # selective dictionary encoding (r6): ON for low-cardinality
-        # columns, OFF for the high-cardinality text/conv_id/param
-        # values whose hashing only burns CPU (r2 finding, refined
-        # per-column; measured faster AND smaller than global-off)
+        frame.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        # selective dictionary encoding (r6 A/B at 1 core, one group:
+        # dict-off 40.6s/187MB, dict-on 47.9s/160MB, SELECTIVE
+        # 38.9s/163MB): ON for the low-cardinality columns (template,
+        # event_type, role, parameter keys), OFF for the high-cardinality
+        # payloads whose hashing only burned CPU
         .option("parquet.enable.dictionary", "true")
         .option("parquet.enable.dictionary#text", "false")
         .option("parquet.enable.dictionary#conv_id", "false")
         .option("parquet.enable.dictionary#parameters.key_value.value", "false")
-        .partitionBy("template_id", "tool", "conv_bucket")
-        .parquet(out_dir)
+        .partitionBy(*partition_by)
+        .parquet(path)
     )
-
-
-def read_routed(spark, out_dir: str) -> DataFrame:
-    return spark.read.parquet(out_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -108,31 +174,27 @@ def iceberg_available(spark) -> bool:
 
 
 def route_stage_iceberg(
-    enriched: DataFrame,
+    plan: RoutePlan,
     table: str,
-    n_buckets: int = 8,
     create: bool = True,
     fallback_dir: str | None = None,
-    **fallback_kwargs,
 ) -> str:
     """Route into an Iceberg table partitioned by
     ``(bucket(n_buckets, conv_id), days(ts), template_id)`` — the
     north_rule layout — via the DataFrameWriterV2 API.  Returns which
     path ran: 'iceberg' or 'parquet-fallback'.
 
-    When the runtime jar is absent (this sandbox), falls back to
-    ``route_stage`` into ``fallback_dir`` (same data, directory-encoded
-    partitioning) and returns 'parquet-fallback'; raises if neither path
-    is possible.
+    When the runtime jar is absent, falls back to the
+    batch parquet route into ``fallback_dir`` (same data,
+    directory-encoded partitioning) and returns 'parquet-fallback';
+    raises if neither path is possible.
     """
-    spark = enriched.sparkSession
+    spark = plan.frame.sparkSession
     if iceberg_available(spark):
         from pyspark.sql.functions import partitioning as P
 
-        cols = route_cols(enriched)
-        routed = enriched.select(*cols)
-        writer = routed.writeTo(table).partitionedBy(
-            P.bucket(n_buckets, F.col("conv_id")), P.days(F.col("ts")), F.col("template_id")
+        writer = plan.attach(plan.frame).drop("conv_bucket").writeTo(table).partitionedBy(
+            P.bucket(plan.n_buckets, F.col("conv_id")), P.days(F.col("ts")), F.col("template_id")
         )
         if create:
             writer.createOrReplace()
@@ -144,5 +206,5 @@ def route_stage_iceberg(
             "Iceberg runtime jar is not on the classpath and no fallback_dir "
             "was given; install iceberg-spark-runtime and configure a catalog"
         )
-    route_stage(enriched, fallback_dir, n_buckets=n_buckets, **fallback_kwargs)
+    write_routed(plan.routed(plan.frame), fallback_dir)
     return "parquet-fallback"

@@ -27,7 +27,7 @@ def main(argv=None) -> int:
     ap.add_argument("--commit-groups", type=int, default=4)
     ap.add_argument("--arrow-udf", action="store_true", help="mask via Arrow pandas UDF")
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--explain", action="store_true", help="print the enrich plan and exit")
+    ap.add_argument("--explain", action="store_true", help="print the route plan and exit")
     args = ap.parse_args(argv)
 
     from sherlog_parser_spark.session import get_spark
@@ -42,14 +42,13 @@ def main(argv=None) -> int:
             transcripts = generate_transcripts(spark, n_convs=args.n_convs, seed=args.seed)
 
         if args.explain:
-            from sherlog_parser_spark.data.dims import role_tool_dim
             from sherlog_parser_spark.plans.dictionary import build_template_dictionary
-            from sherlog_parser_spark.plans.enrich import enrich_stage
             from sherlog_parser_spark.plans.parse import parse_stage
+            from sherlog_parser_spark.plans.route import route_plan
 
             parsed = parse_stage(transcripts, use_arrow_udf=args.arrow_udf)
-            tdict = build_template_dictionary(parsed)
-            enrich_stage(parsed, tdict.df, role_tool_dim(spark)).explain("formatted")
+            plan = route_plan(parsed, build_template_dictionary(parsed), args.n_buckets)
+            plan.routed(plan.frame).explain("formatted")
             return 0
 
         from sherlog_parser_spark.plans.pipeline import run_pipeline

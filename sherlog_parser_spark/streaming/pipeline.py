@@ -2,13 +2,16 @@
 
 The reference is strictly batch (its "real-time" path is a lookback SQL
 query, src/core/anomaly_incidents.py:61-87), so streaming is additive
-coverage, not parity: the same parse -> enrich -> aggregate/route logic
-over ``readStream``, with
+coverage, not parity: the same parse -> route_plan -> aggregate/route
+logic over ``readStream``, with
 
 * event-time tumbling windows + watermark for the A2/A12 counts
   (deliberate deviation documented in SURVEY §2.10: the reference
   includes late data by batch recompute; a watermark drops it),
-* ``foreachBatch`` fan-out for routing — idempotent under micro-batch
+* ``foreachBatch`` fan-out for routing through the batch route plan
+  (plans/route.py: salted exchange, post-exchange attach of template,
+  event_type and parameters, the same parquet writer), so the streaming
+  sink holds the batch sink's rows — idempotent under micro-batch
   REPLAY: the batch_id is a leading partition column and each batch is
   written with dynamic partition overwrite, so a batch replayed after a
   crash (sink written, offsets not committed) rewrites exactly its own
@@ -23,8 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sherlog_parser_spark.plans.enrich import enrich_stage
+from sherlog_parser_spark.plans.dictionary import TemplateDictionary
 from sherlog_parser_spark.plans.parse import parse_stage
+from sherlog_parser_spark.plans.route import ROUTE_PARTITIONS, route_plan, write_routed
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -39,22 +43,16 @@ def read_transcript_stream(spark, path: str, max_files_per_trigger: int = 4) -> 
     )
 
 
-def streaming_enrich(stream: DataFrame, template_dict: DataFrame, dim: DataFrame | None = None) -> DataFrame:
-    """parse + broadcast-join enrich on a stream (stateless, map-side)."""
-    parsed = parse_stage(stream)
-    return enrich_stage(parsed, template_dict, dim, with_params=False)
-
-
 def streaming_tool_usage(
     stream: DataFrame,
-    template_dict: DataFrame,
+    tdict: TemplateDictionary,
     window: str = "1 hour",
     watermark: str = "2 hours",
 ) -> DataFrame:
     """A12 as a streaming windowed aggregation with late-data watermark."""
-    enriched = streaming_enrich(stream, template_dict)
+    routed = route_plan(parse_stage(stream), tdict).frame
     return (
-        enriched.withWatermark("ts", watermark)
+        routed.withWatermark("ts", watermark)
         .groupBy("template_id", "tool", F.window("ts", window).alias("w"))
         .agg(F.count("*").alias("uses"))
         .select(
@@ -68,35 +66,29 @@ def streaming_tool_usage(
 
 def start_stream_route(
     stream: DataFrame,
-    template_dict: DataFrame,
+    tdict: TemplateDictionary,
     out_dir: str,
     checkpoint_dir: str,
     n_buckets: int = 4,
     trigger_available_now: bool = True,
 ):
     """foreachBatch fan-out routing; returns the StreamingQuery."""
-    from sherlog_parser_spark.plans.route import conv_bucket_expr, route_cols
-
-    enriched = streaming_enrich(stream, template_dict)
-    routed = enriched.select(*route_cols(enriched)).withColumn(
-        "conv_bucket", conv_bucket_expr("conv_id", n_buckets)
-    )
+    plan = route_plan(parse_stage(stream), tdict, n_buckets)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # exactly-once under replay: batch content is deterministic from
         # the checkpointed offsets, so overwriting this batch_id's own
         # partitions is idempotent — a crash between sink write and offset
         # commit no longer duplicates rows (r1 ADVICE)
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("parquet.enable.dictionary", "false")
-            .partitionBy("batch_id", "template_id", "tool", "conv_bucket")
-            .parquet(out_dir)
+        write_routed(
+            plan.routed(batch_df).withColumn("batch_id", F.lit(batch_id)),
+            out_dir,
+            ("batch_id", *ROUTE_PARTITIONS),
         )
 
-    writer = routed.writeStream.foreachBatch(write_batch).option("checkpointLocation", checkpoint_dir)
+    writer = plan.frame.writeStream.foreachBatch(write_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
@@ -130,8 +122,8 @@ def compact_stream_output(
     the process died between the append commit and the marker create):
 
     1. STAGE: rewrite the batch into a deterministic per-batch staging
-       dir with ``mode("overwrite")`` — a crashed half-stage is simply
-       overwritten on rerun;
+       dir with the route writer (``write_routed``, partition overwrite)
+       — a crashed half-stage is simply overwritten on rerun;
     2. MARK: create ``<compacted_dir>/_compacted/batch_id=N`` only after
        the staging write committed;
     3. PUBLISH: rename each staged data file into the final partition
@@ -200,13 +192,7 @@ def compact_stream_output(
         marker = jvm.org.apache.hadoop.fs.Path(marker_dir, name)
         staging = jvm.org.apache.hadoop.fs.Path(compacted_dir, f"_staging_{name}")
         if not fs.exists(marker):
-            (
-                spark.read.parquet(str(status.getPath()))
-                .write.mode("overwrite")
-                .option("parquet.enable.dictionary", "false")
-                .partitionBy("template_id", "tool", "conv_bucket")
-                .parquet(str(staging))
-            )
+            write_routed(spark.read.parquet(str(status.getPath())), str(staging))
             fs.create(marker, True).close()
         if fs.exists(staging):
             _publish(staging)

@@ -1,7 +1,8 @@
-"""r6 optimization guard: the dictionary-precomputed enrich stage must be
-row- and column-identical to the legacy per-row formulation — including
-dictionary-MISS rows (null template), empty/whitespace text, and
-token-count mismatches."""
+"""r6 optimization guard: the route plan's post-exchange attach
+(dictionary-precomputed event_type and parameter positions, run here
+unshuffled) must be row- and column-identical to the legacy per-row
+formulation — including dictionary-MISS rows (null template),
+empty/whitespace text, and token-count mismatches."""
 
 from __future__ import annotations
 
@@ -10,28 +11,25 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from sherlog_parser_spark.functions.masking import (
-    event_type_expr,
-    extract_params_expr,
-    normalize_template_expr,
-)
+from sherlog_parser_spark.functions.masking import event_type_expr, extract_params_expr
 from sherlog_parser_spark.plans.dictionary import build_template_dictionary
-from sherlog_parser_spark.plans.enrich import enrich_stage
 from sherlog_parser_spark.plans.parse import parse_stage
+from sherlog_parser_spark.plans.route import route_plan
 
 
-def legacy_enrich(parsed, template_dict, dim=None, with_params=True):
-    """The pre-r6 per-row formulation, kept verbatim as the semantic
-    reference for this test."""
+def legacy_enrich(parsed, template_dict):
+    """The pre-r6 per-row formulation, kept as the semantic reference
+    for this test."""
     out = parsed.join(F.broadcast(template_dict), "sig", "left")
-    if dim is not None:
-        out = out.join(F.broadcast(dim), ["role", "tool"], "left")
-    out = out.withColumn("event_type", event_type_expr("template")).withColumn(
-        "normalized_template", normalize_template_expr("template")
-    )
-    if with_params:
-        out = out.withColumn("parameters", extract_params_expr("text", "template"))
-    return out
+    out = out.withColumn("event_type", event_type_expr("template"))
+    return out.withColumn("parameters", extract_params_expr("text", "template"))
+
+
+def attached(parsed, tdict):
+    """The route plan's attach over its unshuffled frame, without the
+    conv_bucket routing key."""
+    plan = route_plan(parsed, tdict)
+    return plan.attach(plan.frame).drop("conv_bucket")
 
 
 @pytest.fixture(scope="module")
@@ -54,9 +52,8 @@ def _canon(df):
 
 def test_enrich_matches_legacy_on_corpus(spark, parsed_and_dict):
     parsed, tdict = parsed_and_dict
-    new = enrich_stage(parsed, tdict.df)
-    old = legacy_enrich(parsed, tdict.df)
-    assert new.columns == old.columns
+    new = attached(parsed, tdict)
+    old = legacy_enrich(parsed, tdict.df).select(*new.columns)
     assert new.schema == old.schema
     assert _canon(new) == _canon(old)
 
@@ -74,15 +71,15 @@ def test_enrich_matches_legacy_on_dict_miss_and_edge_text(spark, parsed_and_dict
         "conv_id string, turn_idx int, tool string, ts timestamp, text string, sig long",
     )
     assert tdict.df.filter(F.col("sig") == 12345).count() == 0
-    new = enrich_stage(edge, tdict.df)
-    old = legacy_enrich(edge, tdict.df)
+    new = attached(edge, tdict)
+    old = legacy_enrich(edge, tdict.df).select(*new.columns)
     assert new.schema == old.schema
     assert _canon(new) == _canon(old)
-    # the legacy contract: misses get UNKNOWN event_type, null normalized
-    # template, and an EMPTY (not null) parameters map
+    # the legacy contract: misses get UNKNOWN event_type, null template,
+    # and an EMPTY (not null) parameters map
     row = new.filter(F.col("conv_id") == "c0").collect()[0]
     assert row["event_type"] == "UNKNOWN"
-    assert row["normalized_template"] is None
+    assert row["template"] is None
     assert row["parameters"] == {}
 
 
@@ -92,8 +89,8 @@ def test_enrich_matches_legacy_on_token_count_mismatch(spark, parsed_and_dict):
     # differs from the text's -> legacy emits the empty map
     any_sig = tdict.df.select("sig").limit(1).collect()[0][0]
     mismatched = parsed.limit(20).withColumn("sig", F.lit(any_sig))
-    new = enrich_stage(mismatched, tdict.df)
-    old = legacy_enrich(mismatched, tdict.df)
+    new = attached(mismatched, tdict)
+    old = legacy_enrich(mismatched, tdict.df).select(*new.columns)
     assert _canon(new) == _canon(old)
 
 
@@ -103,7 +100,7 @@ def test_enrich_tokenizes_text_once(spark, parsed_and_dict):
     would re-run per variable position (the documented HOF outer-ref
     trap)."""
     parsed, tdict = parsed_and_dict
-    plan = enrich_stage(parsed, tdict.df)._jdf.queryExecution().optimizedPlan().toString()
+    plan = attached(parsed, tdict)._jdf.queryExecution().optimizedPlan().toString()
     # the TEXT tokenization (split(trim(text..)) appears only inside the
     # single projection that binds __lt — at most twice lexically (the
     # two CASE branches of tokens_fast_expr, of which one evaluates per

@@ -8,13 +8,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from sherlog_parser_spark.plans.dictionary import build_template_dictionary
-from sherlog_parser_spark.plans.enrich import enrich_stage
 from sherlog_parser_spark.plans.llm_extract import (
     extend_dictionary,
     extract_new_templates,
     heuristic_extractor,
 )
 from sherlog_parser_spark.plans.parse import parse_stage
+from sherlog_parser_spark.plans.route import route_plan
 
 
 @pytest.fixture(scope="module")
@@ -49,10 +49,10 @@ def test_extended_dictionary_covers_full_corpus(spark, split_corpus):
     frozen = {r["sig"]: r["template_id"] for r in tdict.df.collect()}
     after = {r["sig"]: r["template_id"] for r in full.df.collect()}
     assert all(after[s] == t for s, t in frozen.items())
-    # enrichment with the extended dictionary resolves EVERY row
-    enriched = enrich_stage(parsed, full.df, with_params=False)
-    assert enriched.filter(F.col("template_id").isNull()).count() == 0
-    assert enriched.count() == parsed.count()
+    # routing with the extended dictionary resolves EVERY row
+    routed = route_plan(parsed, full).frame
+    assert routed.filter(F.col("template_id").isNull()).count() == 0
+    assert routed.count() == parsed.count()
 
 
 def test_extractor_output_merges_via_pool(spark):

@@ -5,6 +5,10 @@ sequential pure-Python oracle on
   2. routed-row sets per (template_id, tool) sink,
   3. windowed tool-usage counts (A12),
   4. per-turn text byte-equality under stable (conv_id, turn_idx) order.
+
+The routed-row and per-row template/parameters/event_type gates read the
+sink ``run_pipeline`` writes; the others run on the same route plan's
+unshuffled attach.
 """
 
 from __future__ import annotations
@@ -12,7 +16,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from sherlog_parser_spark.data.dims import role_tool_dim
 from sherlog_parser_spark.oracle.reference_parser import (
     SequentialReferenceParser,
     oracle_route_sets,
@@ -21,8 +24,9 @@ from sherlog_parser_spark.oracle.reference_parser import (
 )
 from sherlog_parser_spark.plans.aggregate import template_frequency, tool_usage_windowed
 from sherlog_parser_spark.plans.dictionary import build_template_dictionary
-from sherlog_parser_spark.plans.enrich import enrich_stage
 from sherlog_parser_spark.plans.parse import parse_stage
+from sherlog_parser_spark.plans.pipeline import run_pipeline
+from sherlog_parser_spark.plans.route import route_plan
 
 
 @pytest.fixture(scope="module")
@@ -35,7 +39,20 @@ def oracle_parsed(transcript_rows):
 def spark_enriched(spark, transcripts):
     parsed = parse_stage(transcripts)
     tdict = build_template_dictionary(parsed)
-    return enrich_stage(parsed, tdict.df, role_tool_dim(spark)).cache(), tdict
+    plan = route_plan(parsed, tdict)
+    return plan.attach(plan.frame).cache(), tdict
+
+
+@pytest.fixture(scope="module")
+def pipeline_sink(spark, transcripts, tmp_path_factory):
+    """The sink run_pipeline writes, with salting on (salt_buckets=2)."""
+    out = str(tmp_path_factory.mktemp("parity") / "run")
+    res = run_pipeline(
+        spark, transcripts, out, n_buckets=4, commit_groups=2, salt_buckets=2,
+        resume=False, write_aggregates=False,
+    )
+    assert res.dictionary.hot_template_ids(), "fixture must salt at least one hot template"
+    return spark.read.parquet(res.routed_dir)
 
 
 def _template_key(tid_to_template: dict[int, str]):
@@ -64,16 +81,10 @@ def test_template_counts_match(oracle_parsed, spark_enriched):
     assert got == expected
 
 
-def test_routed_row_sets_match(oracle_parsed, spark_enriched, tmp_path):
-    parsed, parser = oracle_parsed
-    enriched, _ = spark_enriched
-    from sherlog_parser_spark.plans.route import route_stage
-
-    out = str(tmp_path / "routed")
-    route_stage(enriched, out, n_buckets=4, salt_buckets=2)
-    sink = enriched.sparkSession.read.parquet(out)
+def test_routed_row_sets_match(oracle_parsed, pipeline_sink):
+    parsed, _ = oracle_parsed
     got: dict[tuple, set] = {}
-    for r in sink.select("template_id", "tool", "conv_id", "turn_idx").collect():
+    for r in pipeline_sink.select("template_id", "tool", "conv_id", "turn_idx").collect():
         got.setdefault((r["template_id"], r["tool"]), set()).add((r["conv_id"], r["turn_idx"]))
     expected = oracle_route_sets(parsed)
     assert got == expected
@@ -106,14 +117,15 @@ def test_per_turn_text_equality_stable_order(oracle_parsed, spark_enriched):
         )
 
 
-def test_per_row_template_and_params_match(oracle_parsed, spark_enriched):
+def test_per_row_template_and_params_match(oracle_parsed, pipeline_sink):
     parsed, _ = oracle_parsed
-    enriched, _ = spark_enriched
-    spark_rows = enriched.select(
+    spark_rows = pipeline_sink.select(
         "conv_id", "turn_idx", "template", "parameters", "event_type"
     ).orderBy("conv_id", "turn_idx").collect()
     oracle_sorted = sorted(parsed, key=lambda p: (p.conv_id, p.turn_idx))
+    assert len(spark_rows) == len(oracle_sorted)
     for s, o in zip(spark_rows, oracle_sorted):
+        assert (s["conv_id"], s["turn_idx"]) == (o.conv_id, o.turn_idx)
         assert s["template"] == o.template, (o.conv_id, o.turn_idx)
         assert dict(s["parameters"]) == o.parameters
         assert s["event_type"] == o.event_type
@@ -148,15 +160,17 @@ def test_rollup_aggregates_equal_direct(spark_enriched):
     assert direct_tu == roll_tu
 
 
-def test_template_examples_bookkeeping(oracle_parsed, spark_enriched):
+def test_template_examples_bookkeeping(transcripts, oracle_parsed, spark_enriched):
     """Per-template examples (first-seen, cap 5 — cpp/src/log_parser.cpp:84-88)
     and distinct syntax-variant counts must match the oracle."""
     from sherlog_parser_spark.functions.masking import mask_template_py
     from sherlog_parser_spark.plans.aggregate import template_examples
 
     parsed, parser = oracle_parsed
-    enriched, _ = spark_enriched
-    got = {r["template_id"]: r for r in template_examples(enriched, k=5).collect()}
+    _, tdict = spark_enriched
+    # syntax variants count distinct signatures, which the route frame drops
+    with_sig = parse_stage(transcripts).join(F.broadcast(tdict.df), "sig", "left")
+    got = {r["template_id"]: r for r in template_examples(with_sig, k=5).collect()}
     by_tid: dict[int, list] = {}
     variants: dict[int, set] = {}
     for p in sorted(parsed, key=lambda p: (p.ts, p.conv_id, p.turn_idx)):

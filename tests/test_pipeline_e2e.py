@@ -5,6 +5,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from sherlog_parser_spark.checkpoint import CheckpointManifest
@@ -18,6 +19,15 @@ def _routed_fingerprint(spark, routed_dir):
         F.bit_xor(F.xxhash64("conv_id", "turn_idx", "template_id", "tool", "text")).alias("h"),
     ).collect()[0]
     return row["n"], row["h"]
+
+
+def _header_and_group0(mpath):
+    """The run header and group 0's entry.  The two route-group writers
+    commit concurrently, so group 0 is not always the second line."""
+    lines = open(mpath).read().splitlines(keepends=True)
+    return [lines[0]] + [
+        line for line in lines[1:] if json.loads(line)["unit"] == "bucket_group=0"
+    ]
 
 
 def test_pipeline_end_to_end(spark, transcripts, tmp_path):
@@ -40,12 +50,12 @@ def test_pipeline_resume_skips_committed(spark, transcripts, tmp_path):
     golden = _routed_fingerprint(spark, os.path.join(out, "routed"))
     golden_manifest = CheckpointManifest.load(os.path.join(out, "_manifest.jsonl"))
 
-    # simulate a crash after 1 of 3 commits: keep the run header + the
-    # first group entry, leave the (possibly orphaned) files in place
+    # simulate a crash after 1 of 3 commits: keep the run header + group
+    # 0's entry, leave the (possibly orphaned) files in place
     mpath = os.path.join(out, "_manifest.jsonl")
-    lines = open(mpath).read().strip().splitlines()
+    kept = _header_and_group0(mpath)
     with open(mpath, "w") as f:
-        f.write(lines[0] + "\n" + lines[1] + "\n")
+        f.write("".join(kept))
 
     res = run_pipeline(
         spark, transcripts, out, commit_groups=3, resume=True, write_aggregates=False
@@ -97,9 +107,9 @@ def test_pipeline_resume_reuses_persisted_dictionary(spark, transcripts, tmp_pat
     # drop the second group; poison the in-memory rebuild path by checking
     # the resumed dictionary comes from disk (same object content)
     mpath = os.path.join(out, "_manifest.jsonl")
-    lines = open(mpath).read().strip().splitlines()
+    kept = _header_and_group0(mpath)
     with open(mpath, "w") as f:
-        f.write(lines[0] + "\n" + lines[1] + "\n")
+        f.write("".join(kept))
     res2 = run_pipeline(spark, transcripts, out, commit_groups=2, resume=True, write_aggregates=False)
     assert res2.dictionary.templates == res1.dictionary.templates
     assert res2.dictionary.pool.mapping() == res1.dictionary.pool.mapping()
@@ -160,24 +170,80 @@ def test_params_analytics_over_sink(spark, transcripts, tmp_path):
     assert flagged.filter(~F.col("is_anomaly")).count() > 0
 
 
+def test_pipeline_resume_after_torn_manifest_append(spark, transcripts, tmp_path):
+    """A crash halfway through a manifest append leaves a torn last line:
+    resume must skip it, recompute the uncommitted groups to the clean
+    sink, and leave a manifest that loads again."""
+    out = str(tmp_path / "run_torn")
+    run_pipeline(spark, transcripts, out, commit_groups=3, resume=False, write_aggregates=False)
+    golden = _routed_fingerprint(spark, os.path.join(out, "routed"))
+
+    mpath = os.path.join(out, "_manifest.jsonl")
+    lines = open(mpath).read().splitlines(keepends=True)
+    kept = _header_and_group0(mpath)
+    other = next(line for line in lines[1:] if line not in kept)
+    with open(mpath, "w") as f:
+        f.write("".join(kept) + other[: len(other) // 2])
+    assert set(CheckpointManifest.load(mpath).entries) == {"bucket_group=0"}
+
+    res = run_pipeline(
+        spark, transcripts, out, commit_groups=3, resume=True, write_aggregates=False
+    )
+    assert res.n_rows == transcripts.count()
+    assert _routed_fingerprint(spark, os.path.join(out, "routed")) == golden
+    assert len(CheckpointManifest.load(mpath).entries) == 3
+
+
+def test_manifest_corrupt_middle_line_raises(tmp_path):
+    mpath = str(tmp_path / "_manifest.jsonl")
+    m = CheckpointManifest(mpath)
+    m.commit_run("fp")
+    m.commit("bucket_group=0", 1, "0", "sink", 0.1)
+    body = open(mpath).read()
+    with open(mpath, "w") as f:
+        f.write(body.replace('"unit": "bucket_group=0"', '"unit": bucket_group=0'))
+    m.commit("bucket_group=1", 1, "0", "sink", 0.1)
+    with pytest.raises(json.JSONDecodeError):
+        CheckpointManifest.load(mpath)
+
+
+def test_pipeline_failed_write_releases_cache_and_conf(spark, transcripts, tmp_path, monkeypatch):
+    """A failing routed write must not leave the parse cache persisted or
+    the in-memory columnar compression conf changed."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    conf = "spark.sql.inMemoryColumnarStorage.compressed"
+    spark.conf.set(conf, "true")
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    orig = DataFrameWriter.parquet
+
+    def failing(self, path, *args, **kwargs):
+        if os.path.basename(os.path.normpath(path)) == "routed":
+            raise RuntimeError("injected routed-write failure")
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(RuntimeError, match="injected"):
+        run_pipeline(spark, transcripts, str(tmp_path / "run_fail"), commit_groups=2, resume=False)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == persisted
+    assert spark.conf.get(conf) == "true"
+
+
 def test_route_stage_iceberg_fallback(spark, transcripts, tmp_path):
     """K1/K2 Iceberg slot: with no runtime jar in the sandbox (documented
     install attempt in route.py), route_stage_iceberg must take the
     parquet fallback and produce the standard layout; with the jar it
     would run writeTo(...).partitionedBy(bucket, days, template_id)."""
-    from sherlog_parser_spark.data.dims import role_tool_dim
     from sherlog_parser_spark.plans.dictionary import build_template_dictionary
-    from sherlog_parser_spark.plans.enrich import enrich_stage
     from sherlog_parser_spark.plans.parse import parse_stage
-    from sherlog_parser_spark.plans.route import iceberg_available, route_stage_iceberg
+    from sherlog_parser_spark.plans.route import iceberg_available, route_plan, route_stage_iceberg
 
     parsed = parse_stage(transcripts.limit(500))
-    tdict = build_template_dictionary(parsed)
-    enriched = enrich_stage(parsed, tdict.df, role_tool_dim(spark))
+    plan = route_plan(parsed, build_template_dictionary(parsed))
     out = str(tmp_path / "ice_fallback")
 
     assert not iceberg_available(spark)  # sandbox fact, recorded
-    path_taken = route_stage_iceberg(enriched, "ice.db.turns", fallback_dir=out)
+    path_taken = route_stage_iceberg(plan, "ice.db.turns", fallback_dir=out)
     assert path_taken == "parquet-fallback"
     got = spark.read.parquet(out)
     assert got.count() == 500
@@ -186,4 +252,4 @@ def test_route_stage_iceberg_fallback(spark, transcripts, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="Iceberg runtime jar"):
-        route_stage_iceberg(enriched, "ice.db.turns")
+        route_stage_iceberg(plan, "ice.db.turns")

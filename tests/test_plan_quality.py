@@ -1,32 +1,60 @@
 """Physical-plan assertions (SURVEY §4.3 target plan): the judge-visible
-scale properties — broadcast joins, no fact-side shuffle in enrich,
-filter/column pushdown into the parquet scan — must hold structurally,
-not just by eye."""
+scale properties — broadcast joins, one slim route exchange, no other
+fact-side shuffle on the route path, filter/column pushdown into the
+parquet scan — must hold structurally, not just by eye."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from sherlog_parser_spark.data.dims import role_tool_dim
 from sherlog_parser_spark.plans.dictionary import build_template_dictionary
-from sherlog_parser_spark.plans.enrich import enrich_stage
 from sherlog_parser_spark.plans.parse import parse_stage
+from sherlog_parser_spark.plans.route import route_plan
 
 
 @pytest.fixture(scope="module")
-def enriched_plan(spark, transcripts, tmp_path_factory):
+def route(spark, transcripts, tmp_path_factory):
     # go through parquet so the scan is a real FileSourceScan
     p = str(tmp_path_factory.mktemp("plan") / "t.parquet")
     transcripts.write.mode("overwrite").parquet(p)
     df = spark.read.parquet(p)
     parsed = parse_stage(df)
-    tdict = build_template_dictionary(parsed)
-    return df, enrich_stage(parsed, tdict.df, role_tool_dim(spark))
+    return df, route_plan(parsed, build_template_dictionary(parsed))
+
+
+@pytest.fixture(scope="module")
+def enriched_plan(route):
+    df, plan = route
+    return df, plan.attach(plan.frame)
 
 
 def _plan(df, mode="formatted"):
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
+
+
+def test_routed_frame_has_one_slim_exchange(route):
+    """r6 slim exchange: the routed frame shuffles once, on the route
+    keys, between the dictionary join below it and the template-metadata
+    join above it, and the exchanged rows carry nothing derived from the
+    template."""
+    import re
+
+    _, plan = route
+    routed = plan.routed(plan.frame)
+    tree = _plan(routed, "simple").splitlines()
+    exchanges = [i for i, line in enumerate(tree) if "Exchange hashpartitioning" in line]
+    joins = [i for i, line in enumerate(tree) if "BroadcastHashJoin" in line]
+    assert len(exchanges) == 1, tree
+    # simple mode prints parents above children
+    assert len(joins) == 2 and joins[0] < exchanges[0] < joins[1], tree
+    assert "[template_id#" in tree[joins[0]] and "[sig#" in tree[joins[1]], tree
+    m = re.search(r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]", _plan(routed))
+    shuffled = {c.split("#")[0] for c in m.group(1).split(", ")}
+    assert shuffled == {
+        "conv_id", "turn_idx", "role", "tool", "ts", "text", "template_id", "conv_bucket"
+    }, shuffled
+    assert not shuffled & {"template", "event_type", "parameters"}
 
 
 def test_enrich_uses_broadcast_joins_only(enriched_plan):
@@ -74,9 +102,8 @@ def test_aggregates_are_partial_final(spark, transcripts):
     from sherlog_parser_spark.plans.aggregate import template_frequency
 
     parsed = parse_stage(transcripts)
-    tdict = build_template_dictionary(parsed)
-    enriched = enrich_stage(parsed, tdict.df, with_params=False)
-    plan = _plan(template_frequency(enriched))
+    rp = route_plan(parsed, build_template_dictionary(parsed))
+    plan = _plan(template_frequency(rp.attach(rp.frame)))
     # two HashAggregates around one exchange = map-side partial agg
     assert plan.count("HashAggregate") >= 2
 
@@ -85,14 +112,10 @@ def test_template_examples_has_no_window(spark, transcripts):
     """r2: template_examples is two-phase min-k — the Zipf-head template
     must never funnel its row set through one Window task."""
     from sherlog_parser_spark.plans.aggregate import template_examples
-    from sherlog_parser_spark.plans.dictionary import build_template_dictionary
-    from sherlog_parser_spark.plans.enrich import enrich_stage
-    from sherlog_parser_spark.data.dims import role_tool_dim
-    from sherlog_parser_spark.plans.parse import parse_stage
 
     parsed = parse_stage(transcripts)
     tdict = build_template_dictionary(parsed)
-    enriched = enrich_stage(parsed, tdict.df, role_tool_dim(spark))
+    enriched = parsed.join(F.broadcast(tdict.df), "sig", "left")
     plan = _plan(template_examples(enriched, k=5))
     assert "Window" not in plan, plan
 

@@ -64,12 +64,13 @@ def test_structured_dataset_roundtrip(spark, tmp_path):
 
 def test_results_and_template_sinks(spark, transcripts, tmp_path):
     from sherlog_parser_spark.plans.dictionary import build_template_dictionary
-    from sherlog_parser_spark.plans.enrich import enrich_stage
     from sherlog_parser_spark.plans.parse import parse_stage
+    from sherlog_parser_spark.plans.route import route_plan
 
     parsed = parse_stage(transcripts.limit(500))
     td = build_template_dictionary(parsed)
-    enriched = enrich_stage(parsed, td.df, with_params=False)
+    plan = route_plan(parsed, td)
+    enriched = plan.attach(plan.frame)
     out = str(tmp_path / "results")
     write_results_csv(enriched.select("template_id", "template", "text"), out)
     assert os.path.exists(os.path.join(out, "report.md"))

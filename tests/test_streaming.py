@@ -8,8 +8,9 @@ from pyspark.sql import functions as F
 
 from sherlog_parser_spark.plans.aggregate import tool_usage_windowed
 from sherlog_parser_spark.plans.dictionary import build_template_dictionary
-from sherlog_parser_spark.plans.enrich import enrich_stage
 from sherlog_parser_spark.plans.parse import parse_stage
+from sherlog_parser_spark.plans.pipeline import run_pipeline
+from sherlog_parser_spark.plans.route import ROUTE_COLS, route_plan
 from sherlog_parser_spark.streaming.pipeline import (
     read_transcript_stream,
     start_stream_route,
@@ -30,7 +31,7 @@ def stream_setup(spark, transcripts, tmp_path_factory):
 def test_streaming_counts_match_batch(spark, stream_setup):
     src, tdict, root = stream_setup
     stream = read_transcript_stream(spark, src, max_files_per_trigger=2)
-    agg = streaming_tool_usage(stream, tdict.df, watermark="2 hours")
+    agg = streaming_tool_usage(stream, tdict, watermark="2 hours")
     # complete mode: the final trigger's state is the full aggregate —
     # append mode would hold back windows the watermark hasn't passed
     q = (
@@ -45,8 +46,7 @@ def test_streaming_counts_match_batch(spark, stream_setup):
         (r["template_id"], r["tool"], r["window_start"]): r["uses"]
         for r in spark.sql("SELECT * FROM tu_stream").collect()
     }
-    batch = parse_stage(spark.read.parquet(src))
-    enriched = enrich_stage(batch, tdict.df, with_params=False)
+    enriched = route_plan(parse_stage(spark.read.parquet(src)), tdict).frame
     expected_full = {
         (r["template_id"], r["tool"], r["window_start"]): r["uses"]
         for r in tool_usage_windowed(enriched).collect()
@@ -60,10 +60,10 @@ def test_streaming_route_matches_batch(spark, stream_setup):
     src, tdict, root = stream_setup
     stream = read_transcript_stream(spark, src, max_files_per_trigger=3)
     out = f"{root}/routed_stream"
-    q = start_stream_route(stream, tdict.df, out, f"{root}/ckpt_route")
+    q = start_stream_route(stream, tdict, out, f"{root}/ckpt_route")
     q.awaitTermination(180)
     sink = spark.read.parquet(out)
-    batch = enrich_stage(parse_stage(spark.read.parquet(src)), tdict.df, with_params=False)
+    batch = route_plan(parse_stage(spark.read.parquet(src)), tdict).frame
     got = {
         (r["conv_id"], r["turn_idx"], r["template_id"], r["tool"])
         for r in sink.select("conv_id", "turn_idx", "template_id", "tool").collect()
@@ -73,6 +73,41 @@ def test_streaming_route_matches_batch(spark, stream_setup):
         for r in batch.select("conv_id", "turn_idx", "template_id", "tool").collect()
     }
     assert got == expected
+
+
+def _canon_rows(df):
+    rows = []
+    for r in df.select(*ROUTE_COLS).collect():
+        d = r.asDict()
+        d["parameters"] = tuple(sorted(d["parameters"].items()))
+        rows.append(tuple(d[c] for c in ROUTE_COLS))
+    return sorted(rows, key=repr)
+
+
+def test_streaming_sink_equals_batch_sink(spark, stream_setup):
+    """Streaming routes through the batch route plan: for one input and
+    dictionary its sink (minus batch_id) holds run_pipeline's rows on
+    every sink column, and compaction yields the batch sink's schema."""
+    from sherlog_parser_spark.streaming.pipeline import compact_stream_output
+
+    src, _, root = stream_setup
+    res = run_pipeline(
+        spark, spark.read.parquet(src), f"{root}/batch_run", n_buckets=4,
+        commit_groups=2, resume=False, write_aggregates=False,
+    )
+    batch_sink = spark.read.parquet(res.routed_dir)
+
+    stream = read_transcript_stream(spark, src, max_files_per_trigger=2)
+    out = f"{root}/routed_equal"
+    q = start_stream_route(stream, res.dictionary, out, f"{root}/ckpt_equal", n_buckets=4)
+    q.awaitTermination(180)
+    stream_sink = spark.read.parquet(out)
+    assert _canon_rows(stream_sink.drop("batch_id")) == _canon_rows(batch_sink)
+
+    last = max(r["batch_id"] for r in stream_sink.select("batch_id").distinct().collect())
+    compacted_dir = f"{root}/routed_equal_compacted"
+    assert compact_stream_output(spark, out, compacted_dir, up_to_batch_id=last - 1)
+    assert spark.read.parquet(compacted_dir).schema == batch_sink.schema
 
 
 def test_compact_stream_output_folds_batches_into_batch_layout(spark, stream_setup):
@@ -85,7 +120,7 @@ def test_compact_stream_output_folds_batches_into_batch_layout(spark, stream_set
     src, tdict, root = stream_setup
     stream = read_transcript_stream(spark, src, max_files_per_trigger=2)
     out = f"{root}/routed_compact"
-    q = start_stream_route(stream, tdict.df, out, f"{root}/ckpt_compact")
+    q = start_stream_route(stream, tdict, out, f"{root}/ckpt_compact")
     q.awaitTermination(180)
 
     batch_ids = sorted(
@@ -109,7 +144,7 @@ def test_compact_stream_output_folds_batches_into_batch_layout(spark, stream_set
     got = {tuple(r) for r in compacted.select(*key).collect()} | {
         tuple(r) for r in tail.select(*key).collect()
     }
-    batch = enrich_stage(parse_stage(spark.read.parquet(src)), tdict.df, with_params=False)
+    batch = route_plan(parse_stage(spark.read.parquet(src)), tdict).frame
     expected = {tuple(r) for r in batch.select(*key).collect()}
     assert got == expected
 
@@ -125,7 +160,7 @@ def test_compact_stream_output_crash_replay_no_duplicates(spark, stream_setup):
     src, tdict, root = stream_setup
     stream = read_transcript_stream(spark, src, max_files_per_trigger=2)
     out = f"{root}/routed_crash"
-    q = start_stream_route(stream, tdict.df, out, f"{root}/ckpt_crash")
+    q = start_stream_route(stream, tdict, out, f"{root}/ckpt_crash")
     q.awaitTermination(180)
 
     batch_ids = sorted(
@@ -168,7 +203,7 @@ def test_compact_stream_output_crash_replay_no_duplicates(spark, stream_setup):
 
     got = _multiset(spark.read.parquet(compacted_dir))
     tail = _multiset(spark.read.parquet(out))
-    batch = enrich_stage(parse_stage(spark.read.parquet(src)), tdict.df, with_params=False)
+    batch = route_plan(parse_stage(spark.read.parquet(src)), tdict).frame
     expected = _multiset(batch)
     merged = dict(got)
     for k, v in tail.items():
@@ -275,7 +310,7 @@ def test_streaming_route_restart_resumes(spark, stream_setup, tmp_path):
     ckpt = str(tmp_path / "ckpt_restart")
 
     stream = read_transcript_stream(spark, src, max_files_per_trigger=2)
-    q = start_stream_route(stream, tdict.df, out, ckpt, trigger_available_now=False)
+    q = start_stream_route(stream, tdict, out, ckpt, trigger_available_now=False)
     # wait for at least one committed batch, then stop mid-stream
     import time
 
@@ -287,7 +322,7 @@ def test_streaming_route_restart_resumes(spark, stream_setup, tmp_path):
     q.awaitTermination(60)
 
     stream2 = read_transcript_stream(spark, src, max_files_per_trigger=2)
-    q2 = start_stream_route(stream2, tdict.df, out, ckpt, trigger_available_now=True)
+    q2 = start_stream_route(stream2, tdict, out, ckpt, trigger_available_now=True)
     q2.awaitTermination(180)
 
     sink = spark.read.parquet(out)
@@ -310,7 +345,7 @@ def test_streaming_route_crash_replay_no_duplicates(spark, stream_setup, tmp_pat
     ckpt = str(tmp_path / "ckpt_replay")
 
     stream = read_transcript_stream(spark, src, max_files_per_trigger=2)
-    q = start_stream_route(stream, tdict.df, out, ckpt, trigger_available_now=True)
+    q = start_stream_route(stream, tdict, out, ckpt, trigger_available_now=True)
     q.awaitTermination(180)
     q.stop()
 
@@ -326,7 +361,7 @@ def test_streaming_route_crash_replay_no_duplicates(spark, stream_setup, tmp_pat
         os.remove(crc)
 
     stream2 = read_transcript_stream(spark, src, max_files_per_trigger=2)
-    q2 = start_stream_route(stream2, tdict.df, out, ckpt, trigger_available_now=True)
+    q2 = start_stream_route(stream2, tdict, out, ckpt, trigger_available_now=True)
     q2.awaitTermination(180)
     q2.stop()
 
