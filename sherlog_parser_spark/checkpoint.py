@@ -97,8 +97,14 @@ class CheckpointManifest:
             f.write((json.dumps(entry) + "\n").encode())
 
     def metrics(self) -> dict:
+        # wall_sec: union of the units' [committed_at - wall_sec, committed_at]
+        # intervals, since concurrently written units overlap
+        wall, end = 0.0, float("-inf")
+        for e in sorted(self.entries.values(), key=lambda u: u["committed_at"] - u["wall_sec"]):
+            lo, hi = e["committed_at"] - e["wall_sec"], e["committed_at"]
+            wall, end = wall + max(0.0, hi - max(lo, end)), max(end, hi)
         return {
             "units": len(self.entries),
             "rows": sum(e["rows"] for e in self.entries.values()),
-            "wall_sec": round(sum(e["wall_sec"] for e in self.entries.values()), 4),
+            "wall_sec": round(wall, 4),
         }

@@ -74,15 +74,20 @@ EXTENDED_MASK_RULES: list[tuple[str, str]] = [
     (r"\d{1,2}:\d{2}:\d{2}", "<TDA>"),
 ]
 
+# re.ASCII: \d is [0-9] as in Java, not any script's decimal digit
 _COMPILED_EXT_RULES = [
-    (re.compile(p), repl.replace("$1", "\\1")) for p, repl in EXTENDED_MASK_RULES
+    (re.compile(p, re.ASCII), repl.replace("$1", "\\1")) for p, repl in EXTENDED_MASK_RULES
 ]
 
 # Substring-search pattern (regex_search semantics) used to decide whether a
 # template token is a variable placeholder (cpp/src/template_matcher.cpp:64-66).
 VAR_TOKEN_PATTERN = "<(" + "|".join(VAR_TYPES) + ")>"
 
-_COMPILED_RULES = [(re.compile(p), mask) for p, mask in MASK_RULES]
+_COMPILED_RULES = [(re.compile(p, re.ASCII), mask) for p, mask in MASK_RULES]
+_VAR_TOKEN_RX = re.compile(VAR_TOKEN_PATTERN)
+# a token is a run of characters outside Java's \s = [ \t\n\x0b\f\r];
+# str.split() also splits on Unicode spaces (\xa0, \u2003, \x85) and \x1c-\x1f
+_TOKEN_RX = re.compile(r"[^ \t\n\x0b\x0c\r]+")
 
 
 def tokens_expr(text: Column | str) -> Column:
@@ -128,6 +133,12 @@ def tokens_fast_expr(text: Column | str) -> Column:
     return F.when(clean & (tr != F.lit("")), F.split(tr, " ")).otherwise(
         F.array_remove(F.split(tr, r"\s+"), "")
     )
+
+
+def tokens_py(text: str) -> list[str]:
+    """Python mirror of :func:`tokens_expr` (and of the reference's
+    ``ss >> tok``): the non-empty runs between ASCII whitespace."""
+    return _TOKEN_RX.findall(text)
 
 
 def _mask_token_case(t: Column) -> Column:
@@ -265,7 +276,7 @@ def mask_template_py(text: str, extended: bool = False) -> str:
         for rx, repl in _COMPILED_EXT_RULES:
             text = rx.sub(repl, text)
     out = []
-    for tok in text.split():
+    for tok in tokens_py(text):
         for rx, mask in _COMPILED_RULES:
             if rx.fullmatch(tok):
                 out.append(mask)
@@ -291,17 +302,19 @@ def make_masked_template_udf(extended: bool = False) -> Callable[[Column], Colum
 
 def extract_params_py(text: str, template: str) -> dict[str, str]:
     """Python reference implementation for the oracle."""
-    lt = text.split()
-    tt = template.split()
-    if len(lt) != len(tt):
-        return {}
-    out: dict[str, str] = {}
-    var_rx = re.compile(VAR_TOKEN_PATTERN)
-    for i, (raw, tpl) in enumerate(zip(lt, tt)):
-        m = var_rx.search(tpl)
-        if m:
-            out[f"param_{i}_{m.group(1)}"] = raw
-    return out
+    n_toks, keys, idxs = param_meta_py(template)
+    lt = tokens_py(text)
+    return {k: lt[i] for k, i in zip(keys, idxs)} if len(lt) == n_toks else {}
+
+
+def param_meta_py(template: str) -> tuple[int, list[str], list[int]]:
+    """Per-TEMPLATE parameter metadata, computed once per dictionary
+    template on the driver: the token count plus the map key and position
+    of every variable token, as parallel lists (so the per-row
+    :func:`apply_params_expr` is one int-gather; r6: ~10% off the attach)."""
+    toks = tokens_py(template)
+    var = [(i, m.group(1)) for i, t in enumerate(toks) if (m := _VAR_TOKEN_RX.search(t))]
+    return len(toks), [f"param_{i}_{v}" for i, v in var], [i for i, _ in var]
 
 
 def extract_params_expr(text: Column | str, template: Column | str) -> Column:
@@ -336,46 +349,9 @@ def extract_params_expr(text: Column | str, template: Column | str) -> Column:
     ).otherwise(F.map_from_entries(F.array().cast("array<struct<key:string,value:string>>")))
 
 
-def template_param_meta(template: Column | str) -> Column:
-    """Per-TEMPLATE parameter-extraction metadata (r6 optimization):
-    ``struct<n_toks:int, keys:array<string>, idxs:array<int>>`` — the
-    template's token count plus the precomputed map keys and token
-    positions of every variable token (parallel arrays).  Everything
-    here is functionally dependent on the template string, so the
-    enrich stage computes it once per DICTIONARY row (≤10^4) and
-    broadcasts it, instead of re-tokenizing the template and running
-    regexp_extract per CORPUS row (10^7+).  Parallel arrays rather than
-    an array<struct> (late r6): the row side then runs ONE int-gather
-    transform + ``map_from_arrays`` instead of a struct-building
-    transform + ``map_from_entries`` — interpreted-lambda work per row
-    halves (measured ~10% off the route-attach stage; same pairs in
-    the same order ⇒ identical map).  :func:`apply_params_expr` is the
-    per-row counterpart; the pair is pinned equal to
-    :func:`extract_params_expr` by tests."""
-    tt = tokens_expr(template)
-    var_type = lambda t: F.regexp_extract(t, VAR_TOKEN_PATTERN, 1)  # noqa: E731
-    tagged = F.filter(
-        F.transform(
-            tt,
-            lambda t, i: F.struct(
-                i.cast("int").alias("idx"),
-                F.concat(
-                    F.lit("param_"), i.cast("string"), F.lit("_"), var_type(t)
-                ).alias("key"),
-                (var_type(t) != F.lit("")).alias("is_var"),
-            ),
-        ),
-        lambda s: s["is_var"],
-    )
-    return F.struct(
-        F.size(tt).alias("n_toks"),
-        F.transform(tagged, lambda s: s["key"]).alias("keys"),
-        F.transform(tagged, lambda s: s["idx"]).alias("idxs"),
-    )
-
-
 def apply_params_expr(text_tokens: Column, meta: Column) -> Column:
-    """Row-side parameter extraction from precomputed template metadata:
+    """Row-side parameter extraction from precomputed template metadata
+    (a struct of :func:`param_meta_py`'s ``n_toks``, ``keys``, ``idxs``):
     emits ``map(key -> raw token at idx)`` when the raw token count
     equals the template's, else the empty map (reference behavior at
     cpp/src/log_parser.cpp:300-303; a null ``meta`` — dictionary miss —

@@ -15,19 +15,39 @@ The reference's shared mutable template pool + trie under RW locks
    identical to the sequential reference run (SURVEY §7.0).
 
 The frozen ``sig -> (template_id, template)`` dictionary is returned as
-a DataFrame that downstream stages broadcast-join against.
+a local relation (:func:`local_table`) downstream stages broadcast-join.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from sherlog_parser_spark.oracle.matcher import TemplatePool
 
 MAX_DICT_ROWS = 1_000_000  # hard guard: refuse to collect unbounded dictionaries
+
+
+def local_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-built rows as a JVM ``LocalRelation`` (an Arrow table with
+    the explicit DDL ``schema``): reading it forks no Python worker and
+    its broadcast runs no job.  Two traps:
+
+    * ``spark.createDataFrame(list)`` is a Python RDD that EVERY query
+      reading it re-runs on ``pyspark.daemon`` workers.
+    * ``ConvertToLocalRelation`` folds higher-order-function projections
+      over a local relation at optimization time, and concurrently
+      planned queries share their lambda variables ("The key array and
+      value array of MapData must have the same length"): derive such
+      columns in Python."""
+    st = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist([dict(zip(st.names, r)) for r in rows], to_arrow_schema(st))
+    return spark.createDataFrame(table)
 
 
 @dataclass
@@ -36,6 +56,17 @@ class TemplateDictionary:
     pool: TemplatePool
     n_sigs: int
     counts: dict[int, int] | None = None  # template_id -> row count
+
+    @classmethod
+    def from_pool(
+        cls, spark: SparkSession, pool: TemplatePool, n_sigs: int, counts: dict | None = None
+    ) -> "TemplateDictionary":
+        """The frozen dictionary of a merged ``pool``.  ``df`` is a
+        :func:`local_table`: never ``createDataFrame(list)`` (Python re-run
+        per query) nor HOF projections over it (racy concurrent planning)."""
+        rows = [(sig, tid, pool.templates[tid]) for sig, tid in pool.mapping().items()]
+        df = local_table(spark, rows, "sig long, template_id long, template string")
+        return cls(df, pool, n_sigs, counts)
 
     @property
     def templates(self) -> list[str]:
@@ -78,10 +109,7 @@ def build_template_dictionary(
     for r in rows:
         tid = pool.add(r["sig"], r["masked"])
         counts[tid] = counts.get(tid, 0) + int(r["n"])
-    final = pool.templates
-    dict_rows = [(int(sig), int(tid), final[tid]) for sig, tid in pool.mapping().items()]
-    dict_df = spark.createDataFrame(dict_rows, "sig long, template_id long, template string")
-    return TemplateDictionary(df=dict_df, pool=pool, n_sigs=len(rows), counts=counts)
+    return TemplateDictionary.from_pool(spark, pool, n_sigs=len(rows), counts=counts)
 
 
 def dictionary_state(tdict: TemplateDictionary) -> dict:
@@ -101,13 +129,5 @@ def dictionary_from_state(spark: SparkSession, state: dict) -> TemplateDictionar
     pool = TemplatePool(threshold=state.get("threshold", 0.8))
     pool.templates = list(state["templates"])
     pool._sig_to_id = {int(s): int(t) for s, t in state["mapping"].items()}
-    dict_rows = [
-        (sig, tid, pool.templates[tid]) for sig, tid in pool._sig_to_id.items()
-    ]
-    dict_df = spark.createDataFrame(dict_rows, "sig long, template_id long, template string")
-    return TemplateDictionary(
-        df=dict_df,
-        pool=pool,
-        n_sigs=int(state["n_sigs"]),
-        counts={int(t): int(n) for t, n in state["counts"].items()},
-    )
+    counts = {int(t): int(n) for t, n in state["counts"].items()}
+    return TemplateDictionary.from_pool(spark, pool, int(state["n_sigs"]), counts)

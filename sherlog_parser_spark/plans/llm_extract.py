@@ -122,10 +122,4 @@ def extend_dictionary(
     pool._sig_to_id = dict(tdict.pool.mapping())
     for r in rows:
         pool.add(int(r["sig"]), r["template"])
-    final = pool.templates
-    spark = new_templates.sparkSession
-    dict_rows = [(int(sig), int(tid), final[tid]) for sig, tid in pool.mapping().items()]
-    dict_df = spark.createDataFrame(dict_rows, "sig long, template_id long, template string")
-    return TemplateDictionary(
-        df=dict_df, pool=pool, n_sigs=len(dict_rows), counts=None
-    )
+    return TemplateDictionary.from_pool(new_templates.sparkSession, pool, len(pool.mapping()))

@@ -21,9 +21,9 @@ batch pipeline, streaming, ``run.py --explain`` and the plan dumper
 
 The exchange carries only the raw row + ``template_id`` +
 ``conv_bucket``; everything functionally dependent on the template is
-computed on the ≤10^4-row template table and attached after the
-shuffle, so per-row work reduces to one whitespace tokenization of
-``text`` plus positional indexing.  A dictionary miss (null
+computed once per template on the driver into one local table and
+attached after the shuffle, so per-row work reduces to one whitespace
+tokenization of ``text`` plus positional indexing.  A dictionary miss (null
 ``template_id``) gets a null template, ``UNKNOWN`` event type and an
 empty parameters map — the legacy per-row values (pinned by
 tests/test_enrich_equivalence.py).
@@ -42,11 +42,11 @@ from pyspark.sql import functions as F
 
 from sherlog_parser_spark.functions.masking import (
     apply_params_expr,
-    event_type_expr,
-    template_param_meta,
+    event_type_py,
+    param_meta_py,
     tokens_fast_expr,
 )
-from sherlog_parser_spark.plans.dictionary import TemplateDictionary
+from sherlog_parser_spark.plans.dictionary import TemplateDictionary, local_table
 
 # FIXTURES.md §5 sink schema (reference store analog, src/core/timeseries.py:251-264)
 ROUTE_COLS = [
@@ -54,6 +54,10 @@ ROUTE_COLS = [
     "template_id", "template", "parameters", "event_type",
 ]
 ROUTE_PARTITIONS = ("template_id", "tool", "conv_bucket")
+META_SCHEMA = (
+    "template_id long, template string, event_type string,"
+    " n_toks int, keys array<string>, idxs array<int>"
+)
 
 
 def conv_bucket_expr(conv_id: Column | str, n_buckets: int) -> Column:
@@ -81,23 +85,24 @@ class RoutePlan:
 
     ``frame`` is the slim pre-shuffle frame (raw row + ``template_id`` +
     ``conv_bucket``); callers may filter or observe it before
-    :meth:`routed`.  ``templates`` is the ``(template_id, template)``
-    table the slim rollup joins at rollup cardinality."""
+    :meth:`routed`.  ``meta`` is the per-template table (``META_SCHEMA``);
+    ``templates``, its ``(template_id, template)`` part, feeds the rollup."""
 
     frame: DataFrame
+    meta: DataFrame
     templates: DataFrame
     n_buckets: int
-    _meta: DataFrame
     _salt: Column
 
     def attach(self, frame: DataFrame) -> DataFrame:
         """Attach template, event_type and parameters to a slice of
         ``frame`` (unshuffled); returns the sink columns + conv_bucket."""
+        pmeta = F.struct("n_toks", "keys", "idxs")
         out = (
-            frame.join(F.broadcast(self._meta), "template_id", "left")
-            .withColumn("event_type", F.coalesce(F.col("__event_type"), F.lit("UNKNOWN")))
+            frame.join(F.broadcast(self.meta), "template_id", "left")
+            .withColumn("event_type", F.coalesce(F.col("event_type"), F.lit("UNKNOWN")))
             .withColumn("__lt", tokens_fast_expr("text"))
-            .withColumn("parameters", apply_params_expr(F.col("__lt"), F.col("__pmeta")))
+            .withColumn("parameters", apply_params_expr(F.col("__lt"), pmeta))
         )
         return out.select(*[c for c in ROUTE_COLS if c in out.columns], "conv_bucket")
 
@@ -120,14 +125,11 @@ def route_plan(
         .drop("sig")
         .withColumn("conv_bucket", conv_bucket_expr("conv_id", n_buckets))
     )
-    templates = parsed.sparkSession.createDataFrame(
-        list(enumerate(tdict.templates)), "template_id long, template string"
-    )
-    meta = templates.withColumn("__event_type", event_type_expr("template")).withColumn(
-        "__pmeta", template_param_meta("template")
-    )
+    rows = [(tid, t, event_type_py(t), *param_meta_py(t)) for tid, t in enumerate(tdict.templates)]
+    meta = local_table(parsed.sparkSession, rows, META_SCHEMA)
+    templates = meta.select("template_id", "template")
     return RoutePlan(
-        frame, templates, n_buckets, meta, salt_expr(tdict.hot_template_ids(), salt_buckets)
+        frame, meta, templates, n_buckets, salt_expr(tdict.hot_template_ids(), salt_buckets)
     )
 
 

@@ -122,6 +122,33 @@ def test_param_empty_on_length_mismatch():
     assert extract_params_py("a b c", "a <OBA>") == {}
 
 
+# Tokens split on ASCII whitespace only (Java \s, the reference's
+# ``ss >> tok``): Unicode spaces, NEL and the \x1c-\x1f separators stay
+# inside a token, and only ASCII digits are digits.
+SEPARATOR_CASES = [
+    "user\xa0admin logged in from 10.0.0.1",
+    "code\x1c42 at\u2003host-7 took 15 ms",
+    "next\x85line 0x1f 42",
+    "u a\xa0b 1",
+    "\tlead tab\tand trailing 9\t",
+    "vt\x0bff\x0ccr\rnl\n 7",
+    "arabic \u0661\u0662 digits 99",
+]
+
+
+def test_mask_and_params_jvm_equal_python_on_separators(spark):
+    df = spark.createDataFrame([(t,) for t in SEPARATOR_CASES], "text string")
+    masked = mask_template_expr("text")
+    rows = df.select(
+        "text", masked.alias("m"), extract_params_expr("text", masked).alias("p")
+    ).collect()
+    for r in rows:
+        assert r["m"] == mask_template_py(r["text"]), repr(r["text"])
+        assert dict(r["p"]) == extract_params_py(r["text"], r["m"]), repr(r["text"])
+    # three JVM tokens against a four-token template: no parameters
+    assert extract_params_py("u a\xa0b 1", "user <OID> logged <OID>") == {}
+
+
 def test_event_type_py():
     assert event_type_py("task <OID> failed with exit code <OBA>") == "ERROR"
     assert event_type_py("WARN retry budget low for <OID>") == "WARNING"

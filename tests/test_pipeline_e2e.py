@@ -207,6 +207,17 @@ def test_manifest_corrupt_middle_line_raises(tmp_path):
         CheckpointManifest.load(mpath)
 
 
+def test_manifest_wall_is_union_of_overlapping_units(tmp_path):
+    """Concurrent group writes overlap; their walls must not be summed."""
+    mpath = tmp_path / "_manifest.jsonl"
+    entries = [  # [100, 110] and [108, 114]
+        {"unit": "bucket_group=0", "rows": 3, "wall_sec": 10.0, "committed_at": 110.0},
+        {"unit": "bucket_group=1", "rows": 4, "wall_sec": 6.0, "committed_at": 114.0},
+    ]
+    mpath.write_text("".join(json.dumps(e) + "\n" for e in entries))
+    assert CheckpointManifest.load(str(mpath)).metrics() == {"units": 2, "rows": 7, "wall_sec": 14.0}
+
+
 def test_pipeline_failed_write_releases_cache_and_conf(spark, transcripts, tmp_path, monkeypatch):
     """A failing routed write must not leave the parse cache persisted or
     the in-memory columnar compression conf changed."""

@@ -17,9 +17,14 @@ from sherlog_parser_spark.functions.masking import (
     extract_params_py,
     mask_template_py,
     normalize_template_py,
+    tokens_py,
 )
 from sherlog_parser_spark.oracle.matcher import TemplatePool, merge_templates, similarity
 
+# characters the JVM keeps INSIDE a token although Python's str.split()
+# splits on them (Unicode spaces, NEL, \x1c-\x1f), plus non-ASCII digits
+# that Java's \d does not match
+INNER = "\xa0\u2003\x85\x1c\x1f\u0661"
 # tokens from the interesting alphabet: words, numbers, hex, ids, ips, junk
 token = st.one_of(
     st.from_regex(r"[a-z]{1,8}", fullmatch=True),
@@ -28,15 +33,20 @@ token = st.one_of(
     st.from_regex(r"[a-z]{1,4}-\d{1,3}", fullmatch=True),
     st.from_regex(r"\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}", fullmatch=True),
     st.from_regex(r"[!-~]{1,6}", fullmatch=True),  # printable junk
+    st.from_regex(f"[a-z0-9{INNER}]{{1,6}}", fullmatch=True),
 )
-texts = st.lists(token, min_size=0, max_size=12).map(" ".join)
+# every ASCII whitespace character separates tokens (Java \s)
+sep = st.sampled_from([" ", "  ", "\t", "\n", "\x0b", "\x0c", "\r", " \t "])
+texts = st.tuples(
+    st.sampled_from(["", " ", "\t"]), st.lists(st.tuples(token, sep), min_size=0, max_size=12)
+).map(lambda p: p[0] + "".join(t + s for t, s in p[1]))
 
 
 @given(texts)
 @settings(max_examples=300, deadline=None)
 def test_mask_is_idempotent_on_token_count(text):
     masked = mask_template_py(text)
-    assert len(masked.split()) == len(text.split())
+    assert len(tokens_py(masked)) == len(tokens_py(text))
 
 
 @given(texts)
@@ -44,7 +54,7 @@ def test_mask_is_idempotent_on_token_count(text):
 def test_params_align_with_mask(text):
     masked = mask_template_py(text)
     params = extract_params_py(text, masked)
-    toks, mtoks = text.split(), masked.split()
+    toks, mtoks = tokens_py(text), tokens_py(masked)
     for name, value in params.items():
         m = re.fullmatch(r"param_(\d+)_([A-Z_]+)", name)
         assert m, name
@@ -107,15 +117,23 @@ def test_spark_mask_equals_python_on_fuzz_corpus(spark):
     import random
 
     rng = random.Random(42)
-    words = ["alpha", "beta", "0x1f", "42", "10.0.0.1", "w-7", "x_1", "!!", "a.b", "9999999999"]
+    words = [
+        "alpha", "beta", "0x1f", "42", "10.0.0.1", "w-7", "x_1", "!!", "a.b", "9999999999",
+        "a\xa0b", "x\x1c1", "n\u20032", "p\x8542", "\u0661\u0662", "7\x1f",
+    ]
+    seps = [" ", "  ", "\t", "\n", "\x0b", "\x0c", "\r"]
     rows = [
-        (" ".join(rng.choice(words) for _ in range(rng.randint(0, 14))),) for _ in range(400)
+        ("".join(rng.choice(words) + rng.choice(seps) for _ in range(rng.randint(0, 14))),)
+        for _ in range(400)
     ]
     df = spark.createDataFrame(rows, "text string")
-    from sherlog_parser_spark.functions.masking import mask_template_expr
+    from sherlog_parser_spark.functions.masking import extract_params_expr, mask_template_expr
 
-    for r in df.select("text", mask_template_expr("text").alias("m")).collect():
+    masked = mask_template_expr("text")
+    out = df.select("text", masked.alias("m"), extract_params_expr("text", masked).alias("p"))
+    for r in out.collect():
         assert r["m"] == mask_template_py(r["text"]), repr(r["text"])
+        assert dict(r["p"]) == extract_params_py(r["text"], r["m"]), repr(r["text"])
 
 
 @given(texts, texts)
